@@ -13,6 +13,11 @@ and memory knobs:
   FROM_UNIXTIME(time))``, resources/flink/main.py:71 — wall-clock UTC).
 - Arrow enabled: every Python-side exchange (pandas UDFs, mapInPandas
   in the multimodal path) is Arrow-batched, never row-at-a-time.
+- Streaming checkpoints use Spark's FileSystem-based checkpoint
+  manager: every micro-batch commits several checkpoint files, and the
+  default FileContext-based manager forks a child process for each one
+  on a host without Hadoop's native library. Like ``master``, this is
+  a local-profile setting (see ``get_spark``).
 """
 
 from __future__ import annotations
@@ -43,6 +48,24 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
+        # Checkpoint files (offset log, commit log, one delta per state
+        # partition, per micro-batch) go through the FileSystem-based
+        # manager. The FileContext-based default makes RawLocalFileSystem
+        # fork readlink/chmod for each file when Hadoop's native library
+        # is missing. Nothing is lost on file: paths: Hadoop 3.4.2's
+        # FileContext renames a local file through
+        # AbstractFileSystem.renameInternal(src, dst, overwrite=false),
+        # which checks getFileLinkStatus(dst) and then calls rename(2),
+        # the same check-then-rename this manager does with fs.exists and
+        # fs.rename, only with forks. Spark's checkpoint checksum files
+        # and Hadoop's .crc files are still written. On a cluster this
+        # line goes together with ``master``: checkpoints on HDFS or an
+        # object store keep Spark's default manager.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

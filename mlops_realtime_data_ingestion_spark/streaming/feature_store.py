@@ -60,21 +60,23 @@ class FeatureStore:
         ``event_time`` if absent (reference stamps now() at the sink,
         delivery_stream_to_featurestore/main.py:60); dedups identical
         (key, event_time) pairs within the batch so re-processing is
-        idempotent. Each put commits a versioned manifest (the added
-        file list) enabling :meth:`offline` time travel — the
+        idempotent. A time-partitioned put writes one file per hive
+        partition it touches. Each put commits a versioned manifest (the
+        added file list) enabling :meth:`offline` time travel — the
         commit-log shape a Delta/Iceberg table gets from its format
         (on those backends this is the transaction log itself)."""
-        cols = batch.columns
-        if self.event_time_col not in cols:
+        if self.event_time_col not in batch.columns:
             batch = batch.withColumn(
                 self.event_time_col,
                 F.unix_timestamp(F.current_timestamp()).cast("double"),
             )
-        batch = batch.dropDuplicates([self.key_col, self.event_time_col])
         pcols: tuple[str, ...] = ()
         if self.partition_by_time:
             # reference partitions the offline store year/month/day/hour
-            # (FeatureStoreAggregateParquet.py:40-58)
+            # (FeatureStoreAggregateParquet.py:40-58). The hive columns
+            # are functions of the key, so deduping on them plus the key
+            # is the same dedup, and it reuses the repartition's shuffle:
+            # one shuffle, one file per hive partition per put.
             batch = (
                 batch.withColumn("year", F.year(self.key_col))
                 .withColumn("month", F.month(self.key_col))
@@ -82,6 +84,8 @@ class FeatureStore:
                 .withColumn("hour", F.hour(self.key_col))
             )
             pcols = self._PCOLS
+            batch = batch.repartition(*pcols)
+        batch = batch.dropDuplicates([*pcols, self.key_col, self.event_time_col])
         added = self.backend.append(batch, self.path, pcols)
         self.backend.commit_version(self.path, added)
 

@@ -62,14 +62,13 @@ class StreamingDedup:
 
     # -- state ---------------------------------------------------------
     def _index(self, spark: SparkSession) -> DataFrame:
-        if os.path.isdir(self.index_path):
-            try:
-                return spark.read.schema(
-                    _INDEX_SCHEMA + ", batch_id long"
-                ).parquet(self.index_path)
-            except Exception:
-                pass
-        return spark.createDataFrame([], _INDEX_SCHEMA + ", batch_id long")
+        """The signature index; empty only before the first write. Any
+        read failure propagates: an unreadable index must fail the
+        batch, not pass every row through as clean."""
+        schema = _INDEX_SCHEMA + ", batch_id long"
+        if not os.path.isdir(self.index_path):
+            return spark.createDataFrame([], schema)
+        return spark.read.schema(schema).parquet(self.index_path)
 
     # -- the per-batch transform (pure, unit-testable) -----------------
     def dedup_batch(

@@ -29,6 +29,16 @@ Semantics mapping (SURVEY.md §2.8):
 - T3 idle-source timeout: not needed — micro-batch watermarks advance
   from observed max event time per batch (documented delta).
 
+Fixed cost per micro-batch (a live pipeline runs many small ones):
+- checkpoint commits go through the FileSystem-based checkpoint
+  manager that ``session.get_spark`` sets for local runs (why, and when
+  to drop it: ``session.py``);
+- the aggregate sink persists each batch, because ``isEmpty()`` and
+  ``put_batch`` are two actions and each would otherwise re-run the
+  stateful aggregation and commit its state store again;
+- each put writes one file per hive partition it touches
+  (``FeatureStore.put_batch``), not one per shuffle partition.
+
 Scale: the dedup shuffle keys on the tx hash (uniform), the agg
 shuffle on the minute bucket; state is per-partition (RocksDB/HDFS
 at cluster scale); bronze decouples the two stages' backpressure.
@@ -118,9 +128,15 @@ class StreamingPipeline:
         bronze = spark.readStream.schema(schema).parquet(c.bronze_path)
 
         def upsert(batch: DataFrame, batch_id: int) -> None:
-            if batch.isEmpty():
-                return
-            self.store.put_batch(batch)
+            # Every action on ``batch`` re-runs the stateful aggregation
+            # and its state-store commit; persisted, isEmpty() and
+            # put_batch share one run.
+            batch = batch.persist()
+            try:
+                if not batch.isEmpty():
+                    self.store.put_batch(batch)
+            finally:
+                batch.unpersist()
 
         writer = (
             self.aggregated(bronze)
@@ -133,14 +149,26 @@ class StreamingPipeline:
         return writer.start()
 
     # -- the whole job ---------------------------------------------------
-    def run(self, source: DataFrame, available_now: bool = True, timeout_s: int = 300) -> None:
-        """availableNow drains the backlog stage-by-stage and stops
-        (test/replay mode); otherwise both queries run continuously."""
+    def run(
+        self, source: DataFrame, available_now: bool = True, timeout_s: float = 300
+    ) -> tuple[StreamingQuery, StreamingQuery]:
+        """Start both queries and return their handles (ingest,
+        aggregate). availableNow drains the backlog stage-by-stage and
+        stops (test/replay mode): a stage still running after
+        ``timeout_s`` is stopped and raises ``TimeoutError``, so the
+        aggregate query never starts on a partial bronze. Otherwise both
+        queries run continuously and the caller owns the handles."""
         spark = source.sparkSession
         ingest_q = self.start_ingest(source, available_now)
-        if available_now:
-            ingest_q.awaitTermination(timeout_s)
-            agg_q = self.start_aggregate(spark, available_now=True)
-            agg_q.awaitTermination(timeout_s)
-        else:
-            self.start_aggregate(spark, available_now=False)
+        if not available_now:
+            return ingest_q, self.start_aggregate(spark, available_now=False)
+        _drain(ingest_q, timeout_s, "ingest")
+        agg_q = self.start_aggregate(spark, available_now=True)
+        _drain(agg_q, timeout_s, "aggregate")
+        return ingest_q, agg_q
+
+
+def _drain(query: StreamingQuery, timeout_s: float, name: str) -> None:
+    if not query.awaitTermination(timeout_s):
+        query.stop()
+        raise TimeoutError(f"{name} query did not drain its backlog in {timeout_s} s")

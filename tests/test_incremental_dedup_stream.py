@@ -5,7 +5,9 @@ extend the index, replays are idempotent."""
 from __future__ import annotations
 
 import os
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from mlops_realtime_data_ingestion_spark.streaming.incremental_dedup import (
@@ -106,3 +108,34 @@ def test_batch_replay_is_idempotent(spark, tmp_path):
     # the replay must NOT have matched the batch against its own
     # first-attempt signatures
     assert sd.dups(spark).count() == 0
+
+
+def test_damaged_index_fails_the_sink(spark, tmp_path):
+    """An index that exists but cannot be read must fail the batch: read
+    as empty, it would pass every near-duplicate through as clean."""
+    from pyspark.errors import StreamingQueryException
+
+    input_dir = str(tmp_path / "in")
+    os.makedirs(input_dir)
+    sd = StreamingDedup(str(tmp_path / "dd3"))
+    _write_batch(spark, input_dir, [_doc(1, 1), _doc(2, 2)], "b1")
+    _drain(spark, sd, input_dir)
+
+    # a data file outside the batch_id=<n>/ layout: partition discovery
+    # of the index now fails
+    part = next(
+        f for f in os.listdir(os.path.join(sd.index_path, "batch_id=0"))
+        if f.endswith(".parquet")
+    )
+    os.makedirs(os.path.join(sd.index_path, "stray"))
+    shutil.copy(
+        os.path.join(sd.index_path, "batch_id=0", part),
+        os.path.join(sd.index_path, "stray", part),
+    )
+
+    _write_batch(spark, input_dir, [(3, _doc(1, 1)[1] + " extra")], "b2")
+    stream = spark.readStream.schema("doc_id long, text string").parquet(input_dir)
+    q = sd.attach(stream, available_now=True)
+    with pytest.raises(StreamingQueryException, match="CONFLICTING_DIRECTORY_STRUCTURES"):
+        q.awaitTermination(120)
+    assert sorted(r["doc_id"] for r in sd.clean(spark).collect()) == [1, 2]
